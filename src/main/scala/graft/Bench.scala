@@ -76,10 +76,11 @@ object Bench {
       .config("spark.ui.enabled", "false")
       // store lifecycles are commit-bound (JobProfile r19: 14-18 jobs of
       // 30-300 ms per DML run, ~40% of wall in driver-side gaps between
-      // them): drop the per-write _SUCCESS marker and the two-phase
-      // v1 rename — standard parquet-sink tuning (guide §6); manifest
-      // commits are the store's own atomicity, the committer's marker
-      // adds nothing
+      // them): drop the per-write success marker and the two-phase v1
+      // rename — standard parquet-sink tuning. This weakens no store:
+      // every compacted or searched store commits through
+      // EpochManifest, and no reader decides completeness from the
+      // committer's marker
       .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
 
@@ -236,7 +237,19 @@ object Bench {
       "org.apache.spark.scheduler.DAGScheduler",
       org.apache.logging.log4j.Level.FATAL)
 
+  /** Exit 1 when any named query is not in the catalog, before a
+    * session starts: a misspelled name would otherwise drop out of the
+    * run and leave the rest to read as a complete result. */
+  def refuseUnknownQueries(tag: String, names: Iterable[String]): Unit = {
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[$tag] no such query: ${unknown.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
+    refuseUnknownQueries("bench", args)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = sessionBuilder(cpus).getOrCreate()
@@ -249,15 +262,6 @@ object Bench {
     val selected =
       if (args.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(args.toSet).toMap
-    args.filterNot(SparkEntry.queries.contains)
-      .foreach(n => System.err.println(s"[bench] no such query: $n"))
-    if (args.nonEmpty && selected.isEmpty) {
-      // all names misspelled: a plausible-looking {"value":0.0} line would
-      // be recorded as a real measurement — fail instead
-      System.err.println("[bench] no selected query exists; refusing to emit an empty result")
-      spark.stop()
-      sys.exit(1)
-    }
     val (laStart, jvmsStart) = loadTelemetry()
     val wall0 = System.nanoTime()
     val results0 = measure(spark, selected, sfDir)

@@ -56,6 +56,8 @@ object Verify {
     // optimization rounds' per-query oracle adjudication (the driver
     // always calls with exactly two args = full catalog)
     val Array(sfDir, outDir) = args.take(2)
+    val sel = args.drop(2).toSet
+    Bench.refuseUnknownQueries("verify", sel)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the SAME session recipe as Bench (join posture, committer tuning):
     // the oracle gate must exercise the exact configuration the bench
@@ -63,14 +65,6 @@ object Verify {
     val spark = Bench.sessionBuilder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Bench.silenceBenignStreamingTermination()
-    val sel = args.drop(2).toSet
-    // a typo'd name must not produce an empty-but-successful run that
-    // reads as "query passed adjudication"
-    val unknown = sel.diff(SparkEntry.queries.keySet)
-    if (unknown.nonEmpty) {
-      System.err.println(s"[verify] no such query: ${unknown.mkString(", ")}")
-      if (sel.forall(unknown.contains)) { spark.stop(); sys.exit(1) }
-    }
     val qs = if (sel.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(sel).toMap
     val os = if (sel.isEmpty) SparkEntry.oracleSql

@@ -4,17 +4,20 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Snapshot-isolated epoch store — the commit protocol the persisted
-  * IVF-PQ serving index reads through.
+/** Snapshot-isolated epoch store — the one commit protocol every
+  * persisted epoch store in the engine goes through: the epochstore
+  * table format, the search indexes (IVF, IVF-PQ codes, text bands and
+  * shingles, media signatures, inverted postings) and the streaming
+  * serving partials.
   *
-  * The plain `epoch=N` dir layout ([[graft.streaming.Jobs.compactEpochStore]])
-  * cannot give a CONCURRENT reader isolation: its swap is
-  * delete-covered-dirs-then-rename-fold, so a searcher that opened the
-  * index just before a compaction reads files that vanish mid-scan.
-  * A long-running serving index needs the property real table formats
-  * (Iceberg, Delta) are built around: immutable data dirs + an atomic
-  * manifest commit + garbage collection that lags live snapshots. This
-  * is that idea at the ~100-line scale this engine needs.
+  * Invariant: a reader sees exactly the data dirs one complete manifest
+  * names, and no dir a retained manifest names is ever mutated or
+  * deleted. Completeness is decided by the manifest alone, never by a
+  * marker the parquet committer may or may not write, so committer
+  * settings cannot weaken it. This is the idea real table formats
+  * (Iceberg, Delta) are built around — immutable data dirs + an atomic
+  * manifest commit + garbage collection that lags live snapshots — at
+  * the scale this engine needs.
   *
   * Layout under `root/`:
   *   d<epoch>-<attempt>/...        immutable data dirs (inner layout free,
@@ -804,21 +807,25 @@ object EpochManifest {
 
   /** Fold every committed entry with epoch < `uptoEpoch` into ONE new
     * data dir and swap it in with a single manifest commit, then gc —
-    * the snapshot-isolated compaction every manifest store shares
-    * (IVF-PQ codes, text band/shingle, media signatures). Readers
-    * holding the pre-compaction manifest keep every dir they resolved
-    * ([[gc]]'s two-manifest lag); crash before the commit leaves an
-    * orphan fold dir for a later gc and the old manifest fully live. */
+    * the snapshot-isolated compaction every manifest store shares.
+    * `fold` maps the union of the covered rows to the fold's rows, in
+    * `schema`: row identity for the searched stores, a re-aggregation
+    * for a store of mergeable partials (it keeps the fold at one row per
+    * key instead of one per epoch). Readers holding the pre-compaction
+    * manifest keep every dir they resolved ([[gc]]'s two-manifest lag);
+    * a crash before the commit leaves an orphan fold dir for a later gc
+    * and the old manifest fully live. */
   def compact(spark: SparkSession, root: String, schema: StructType,
               uptoEpoch: Long = Long.MaxValue,
-              partitionBy: Seq[String] = Nil, coalesceTo: Int = 8): Unit = {
+              partitionBy: Seq[String] = Nil, coalesceTo: Int = 8,
+              fold: DataFrame => DataFrame = identity): Unit = {
     val es = entries(spark, root)
     val covered = es.filter(_.epoch < uptoEpoch)
     if (covered.size <= 1) return // already compact — makes re-runs no-ops
     val maxCov = covered.map(_.epoch).max
-    val folded = covered
+    val folded = fold(covered
       .map(e => spark.read.schema(schema).parquet(s"$root/${e.dir}"))
-      .reduce(_ unionByName _)
+      .reduce(_ unionByName _))
       .coalesce(coalesceTo)
     val foldDir = newFoldDir(spark, root, maxCov)
     val w = folded.write.mode("overwrite")

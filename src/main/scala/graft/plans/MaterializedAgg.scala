@@ -261,34 +261,22 @@ object MaterializedAgg {
               mvRoot: String = null): Unit = {
     val meta = metaFor(base, mvRoot, "compact")
     val spark = base.sparkSession
-    import graft.core.EpochManifest
-    val es = EpochManifest.entries(spark, meta.mvRoot)
-    val covered = es.filter(_.epoch < uptoEpoch)
-    if (covered.size <= 1) return
-    val maxCov = covered.map(_.epoch).max
-    val partials = covered
-      .map(e => spark.read.schema(meta.schema).parquet(s"${meta.mvRoot}/${e.dir}"))
-      .reduce(_ unionByName _)
     val refold = Seq(sum(col("__cnt")).as("__cnt")) ++
       meta.sumCols.map(c => sum(col(s"__sum_$c")).as(s"__sum_$c")) ++
       meta.sumLongCols.map(c => sum(col(s"__suml_$c")).as(s"__suml_$c")) ++
       meta.minCols.map(c => min(col(s"__min_$c")).as(s"__min_$c")) ++
       meta.maxCols.map(c => max(col(s"__max_$c")).as(s"__max_$c")) ++
       meta.cntCols.map(c => sum(col(s"__cntn_$c")).as(s"__cntn_$c"))
-    val folded = partials.groupBy(storedGroupCols(meta).map(col): _*)
-      .agg(refold.head, refold.tail: _*)
-      // __cnt re-sums to long — cast back so the fold's schema stays
-      // byte-identical to an epoch-0 cube
-      .withColumn("__cnt", col("__cnt").cast("long"))
-      .select(meta.schema.fieldNames.map(col).toSeq: _*)
-    val foldDir = EpochManifest.newFoldDir(spark, meta.mvRoot, maxCov)
-    folded.write.mode("overwrite").parquet(s"${meta.mvRoot}/$foldDir")
-    // OCC fold commit — a concurrent refresh's delta epoch above the
-    // fold span rebases in; a touched covered partial refuses
-    EpochManifest.commitWith(spark, meta.mvRoot)(EpochManifest.rebaseFold(
-      es, covered, graft.core.EpochManifest.Entry(maxCov, foldDir,
-        lo = covered.map(_.minEpoch).min)))
-    EpochManifest.gc(spark, meta.mvRoot)
+    // coalescing to the shuffle width leaves the fold's file count as the
+    // re-aggregation writes it
+    graft.core.EpochManifest.compact(spark, meta.mvRoot, meta.schema, uptoEpoch,
+      coalesceTo = spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      fold = _.groupBy(storedGroupCols(meta).map(col): _*)
+        .agg(refold.head, refold.tail: _*)
+        // __cnt re-sums to long — cast back so the fold's schema stays
+        // byte-identical to an epoch-0 cube
+        .withColumn("__cnt", col("__cnt").cast("long"))
+        .select(meta.schema.fieldNames.map(col).toSeq: _*))
   }
 
   /** Drop a registration (tests; a production drop-MV). `mvRoot = null`

@@ -692,36 +692,48 @@ object VectorCatalog {
   def annIvfWith(corpus: DataFrame, geo: IvfGeometry): DataFrame =
     topKByCosine(ivfCandidates(corpus, geo), 10)
 
-  /** Persist the IVF index: the assigned corpus written under
-    * `epoch=0`, PARTITIONED BY `list_id` — the layout that makes
-    * [[searchIvfIndex]]'s candidate read a directory-level prune
-    * instead of a corpus scan. Returns the coarse-quantizer model;
-    * callers keep it (or rebuild it from the same corpus — it is
-    * deterministic) for query-time probing.
-    *
-    * Epoch-keyed like the PQ index ([[buildIvfPqIndex]]), for the same
-    * reason: [[graft.streaming.Jobs.ivfIndexAppend]] grows this layout
-    * with one plain batch-written epoch dir per micro-batch. (Its
-    * earlier form was a parquet file SINK into the same dir — whose
-    * `_spark_metadata` log takes over any later `spark.read.parquet` of
-    * the root and silently EXCLUDES the batch-built base files from
-    * every search. Epoch dirs under the rename protocol compose with
-    * batch writes and stay exactly-once via epoch-keyed overwrite.) */
+  /** Persist the IVF index: the assigned corpus committed as epoch 0 of
+    * an [[graft.core.EpochManifest]] store rooted at `indexDir`, with
+    * `list_id` a partition column in every data dir — the layout that
+    * makes [[searchIvfIndex]]'s candidate read a directory-level prune
+    * instead of a corpus scan, and the one the IVF-PQ codes store uses.
+    * [[graft.streaming.Jobs.ivfIndexAppend]] appends later epochs; a
+    * search reads exactly the dirs one manifest names, so it never sees
+    * a half-landed epoch. Returns the coarse-quantizer model; callers
+    * keep it (or rebuild it from the same corpus — it is deterministic)
+    * for query-time probing. */
   def buildIvfIndex(corpus: DataFrame, geo: IvfGeometry, indexDir: String): IvfAssigner = {
     val assigner = ivfModel(corpus, geo)
-    ivfAssign(corpus, corpus.sparkSession.sparkContext.broadcast(assigner)).write
-      .mode("overwrite").partitionBy("list_id").parquet(s"$indexDir/epoch=0")
+    appendIvfIndex(corpus, assigner, indexDir, epoch = 0L)
     assigner
   }
+
+  /** The stored IVF index row — explicit so manifest reads never infer
+    * a schema (an epoch with no rows has no file to infer from). */
+  val ivfIndexSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType, containsNull = false)),
+      StructField("list_id", LongType)))
+  }
+
+  /** Assign a batch against the fixed model and land it as IVF index
+    * epoch `epoch` (a retried epoch commits a replacement entry). */
+  def appendIvfIndex(batch: DataFrame, assigner: IvfAssigner,
+                     indexDir: String, epoch: Long): Unit =
+    graft.core.EpochManifest.append(
+      ivfAssign(batch, batch.sparkSession.sparkContext.broadcast(assigner)),
+      indexDir, epoch, partitionBy = Seq("list_id"))
 
   /** Search a persisted IVF index: probe cells are computed driver-side
     * from the broadcast-scale model (queries arrive from OUTSIDE the
     * cluster in a serving path — they are a handful of vectors, not a
-    * DataFrame), the index read prunes to the union of probed
-    * partitions (`PartitionFilters` on `list_id` — gated by PlanAudit),
-    * and scoring/ranking shares [[topKByCosine]] with the in-memory
-    * plan, so results are identical to [[annIvfWith]] over the same
-    * corpus (VectorSpec proves equality). */
+    * DataFrame), the read of the manifest snapshot prunes every entry to
+    * the probed `list_id` partitions (VectorSpec asserts the scan's
+    * selected partitions equal the probed cells), and scoring/ranking
+    * shares [[topKByCosine]] with the in-memory plan, so results are
+    * identical to [[annIvfWith]] over the same corpus (VectorSpec proves
+    * equality). */
   def searchIvfIndex(spark: SparkSession, indexDir: String, assigner: IvfAssigner,
                      queries: Seq[(Long, Array[Float])], nprobe: Int,
                      k: Int = 10): DataFrame = {
@@ -730,7 +742,7 @@ object VectorCatalog {
       assigner.probe(qe, nprobe).map(l => (qid, qe, l)) }
     val touched = probes.map(_._3).distinct.sorted
     val probeDf = probes.toDF("qid", "qe", "probe")
-    val cand = spark.read.parquet(indexDir)
+    val cand = graft.core.EpochManifest.read(spark, indexDir, ivfIndexSchema)
       // partition-column predicate → directory-level pruning: only the
       // probed cells are listed and read
       .filter(col("list_id").isin(touched: _*))
@@ -1829,9 +1841,8 @@ object VectorCatalog {
   }
 
   /** The codes store root under an index dir — a snapshot-isolated
-    * [[graft.core.EpochManifest]] store since r11 (immutable data dirs +
-    * atomic manifest commits), replacing bare `epoch=N` dirs whose
-    * compaction swap raced concurrent searches. */
+    * [[graft.core.EpochManifest]] store (immutable data dirs + atomic
+    * manifest commits), so a compaction never disturbs a running search. */
   def codesRoot(indexDir: String): String = s"$indexDir/codes"
 
   /** The stored code row shape — explicit so manifest reads never need

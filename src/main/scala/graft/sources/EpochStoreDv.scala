@@ -401,8 +401,6 @@ private[graft] object EpochStoreDv {
     // upstream PARALLEL while landing one journal file: coalesce(1)
     // would collapse the whole mixed-entry scan into a single task.
     positions.repartition(1).write.mode("overwrite").parquet(dvOut)
-    // drop _SUCCESS-style markers so the dv dir holds position files
-    // plus nothing the loader has to skip beyond the name filter
     val matched = spark.read.schema(dvSchema).parquet(dvOut).count()
     if (matched == 0L) {
       fs.delete(new Path(s"$root/$dir"), true)

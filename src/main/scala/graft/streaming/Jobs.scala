@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import graft.core.EpochManifest
 import graft.queries.Parity._
 
 /** The streaming layer the reference declares but never implements
@@ -635,21 +636,21 @@ object Jobs {
     *  - raw: each epoch overwrites its own `epoch=<id>` partition dir, so
     *    a retried epoch replaces its previous partial output instead of
     *    appending duplicates;
-    *  - serving: INCREMENTAL — each epoch writes only its own partial
-    *    aggregate (idempotent epoch-partition overwrite), and the serving
-    *    view folds the partials. Per-trigger work is O(batch rows) +
-    *    O(epochs × keys) tiny partial rows; the raw history is NEVER
+    *  - serving: INCREMENTAL — each epoch lands only its own partial
+    *    aggregate as manifest epoch `epochId` of the
+    *    [[graft.core.EpochManifest]] store `<servingDir>.partials` (a
+    *    retried epoch commits a replacement entry), and the serving view
+    *    folds the committed partials. Per-trigger work is O(batch rows)
+    *    + O(epochs × keys) tiny partial rows; the raw history is NEVER
     *    re-read (round 1 re-aggregated the whole raw store per epoch —
     *    O(epochs × history) total, a scale-killer on a long stream).
     *    Partial totals stay DECIMAL until the final fold: decimal sums are
     *    exact and associative, so two-level == one-level aggregation
     *    bit-for-bit (a double partial would drift in the last ulp).
     *    On a stream with many epochs the partials themselves are compacted
-    *    in-line by [[compactServingPartials]] every `compactEvery` epochs
-    *    (fold the committed epoch dirs into one base — same idempotence),
-    *    so the partial-store dir count is bounded by ~`compactEvery` + 1
-    *    for the lifetime of the stream instead of growing one dir per
-    *    epoch (unbounded listing cost was the round-3 judge's top finding).
+    *    in-line by [[compactServingPartials]] every `compactEvery` epochs,
+    *    so the partial store holds ~`compactEvery` + 1 entries for the
+    *    lifetime of the stream instead of one per epoch.
     */
   def dualSinkQuery(df: DataFrame, rawDir: String, servingDir: String,
                     checkpointDir: String, compactEvery: Int = 8): StreamingQuery =
@@ -660,9 +661,8 @@ object Jobs {
         val spark = batch.sparkSession
         // Compact BEFORE this epoch writes anything, covering only epochs
         // < epochId: those are checkpoint-committed and can never be
-        // retried, while a leftover `epoch=<epochId>` dir from a failed
-        // attempt of THIS epoch stays out of the base and is simply
-        // overwritten below — folding it would double-count on retry.
+        // retried, so the fold's span stays below every epoch a retry
+        // can still commit (the manifest refuses an append inside it).
         if (compactEvery > 0 && epochId > 0 && epochId % compactEvery == 0)
           compactServingPartials(spark, servingDir, uptoEpoch = epochId)
         // two sinks consume this batch — persist it or each write
@@ -671,9 +671,9 @@ object Jobs {
         batch.persist()
         try {
           batch.write.mode("overwrite").parquet(s"$rawDir/epoch=$epochId")
-          batch.groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n"), sum(col("value").cast(Dec)).as("total_dec"))
-            .write.mode("overwrite").parquet(s"$servingDir.partials/epoch=$epochId")
+          EpochManifest.append(foldPartials(batch.select(col("event_type"),
+              lit(1L).as("n"), col("value").cast(Dec).as("total_dec"))),
+            partialsRoot(servingDir), epochId)
         } finally batch.unpersist()
         servingFromPartials(spark, servingDir)
           .write.mode("overwrite").parquet(servingDir)
@@ -681,144 +681,41 @@ object Jobs {
       }
       .start()
 
-  /** Fold the per-epoch partial aggregates into the serving aggregate.
+  /** The serving sink's partial row, explicit so manifest reads never
+    * infer a schema (an epoch with no rows has no file to infer from). */
+  val servingPartialSchema: StructType = StructType(Seq(
+    StructField("event_type", StringType),
+    StructField("n", LongType),
+    StructField("total_dec", Dec)))
+
+  private def partialsRoot(servingDir: String) = s"$servingDir.partials"
+
+  /** Merge partial rows per `event_type` — one epoch's rows into its
+    * partial, and committed partials into a compaction fold. The sum is
+    * cast back to `Dec` so every level keeps [[servingPartialSchema]];
+    * decimal sums are exact, so the nesting changes no total. */
+  private def foldPartials(df: DataFrame): DataFrame =
+    df.groupBy(col("event_type"))
+      .agg(sum(col("n")).as("n"), sum(col("total_dec")).cast(Dec).as("total_dec"))
+
+  /** Fold the committed partial aggregates into the serving aggregate.
     * Input is epochs × keys rows (not the raw history). */
   def servingFromPartials(spark: SparkSession, servingDir: String): DataFrame =
-    spark.read.parquet(s"$servingDir.partials")
+    EpochManifest.read(spark, partialsRoot(servingDir), servingPartialSchema)
       .groupBy(col("event_type"))
       .agg(sum(col("n")).as("n"), sum(col("total_dec")).cast("double").as("total"))
 
-  /** Compact the partial-aggregate epoch dirs with epoch < `uptoEpoch`
-    * into a single base dir, bounding the partial-store dir count on a
-    * long-lived stream. The base is named `epoch=<max covered epoch>`:
-    * epoch ids only grow, so it can never collide with a future epoch's
-    * dir, and a re-run sees a single covered dir and no-ops (idempotent).
-    * Callers inside `foreachBatch` pass `uptoEpoch = epochId` so a
-    * leftover partial from a failed attempt of the CURRENT epoch is never
-    * folded into the base (the retry overwrites it instead — exactly-once
-    * is preserved across retries). Decimal totals keep the fold exact.
-    *
-    * Crash safety: the fold is parked under `.compact_tmp/upto=<maxCov>`
-    * BEFORE any covered dir is deleted, and every entry first calls
-    * [[recoverCrashedCompaction]]. A crash anywhere in the
-    * delete-then-rename window leaves either (a) an incomplete fold (no
-    * _SUCCESS) with all covered dirs intact — discarded and redone — or
-    * (b) a complete fold whose coverage is recorded in its dir name —
-    * finished by deleting the remaining `epoch<=maxCov` remnants and
-    * renaming the fold into place. Nothing committed is ever lost. */
+  /** Compact the committed partial epochs < `uptoEpoch` into one fold
+    * entry holding one row per `event_type`, through
+    * [[graft.core.EpochManifest.compact]]: the fold lands as a new dir
+    * and one manifest commit swaps it in, so a crash at any step leaves
+    * either the old snapshot or the new one live, never a mix. Callers
+    * inside `foreachBatch` pass `uptoEpoch = epochId` so a failed attempt
+    * of the CURRENT epoch is never folded (its retry replaces it). */
   def compactServingPartials(spark: SparkSession, servingDir: String,
                              uptoEpoch: Long = Long.MaxValue): Unit =
-    compactEpochStore(spark, s"$servingDir.partials", s"$servingDir.compact_tmp",
-      uptoEpoch, writePartitionBy = Nil) { df =>
-      df.groupBy(col("event_type"))
-        .agg(sum(col("n")).as("n"), sum(col("total_dec")).as("total_dec"))
-        .repartition(1) // keys-sized frame → one file per compacted base
-    }
-
-  /** The rename-protocol epoch compaction behind
-    * [[compactServingPartials]] — the one epoch store whose reads are
-    * the stream's own foreachBatch folds (never a concurrent external
-    * searcher), so the delete-then-rename swap needs no snapshot
-    * isolation. Every SEARCHED store (text bands/shingles, media
-    * signatures, IVF-PQ codes) compacts through
-    * [[graft.core.EpochManifest.compact]] instead, whose manifest swap
-    * is atomic under concurrent readers. Folds the `epoch=N` dirs under
-    * `storeDir` with N < `uptoEpoch` into a single `epoch=<max covered>`
-    * dir. The base dir name can never collide with a future epoch
-    * (epoch ids only grow) and a re-run sees one covered dir and no-ops
-    * (idempotent). Callers inside `foreachBatch` pass an `uptoEpoch`
-    * that covers only checkpoint-COMMITTED epochs, so a leftover dir
-    * from a failed attempt of the current epoch is never folded (the
-    * retry overwrites it — exactly-once preserved).
-    *
-    * `fold` turns the union of the covered rows into the base's rows —
-    * re-aggregation for the serving partials. `writePartitionBy` keeps a
-    * partition layout intact through the fold, so directory-level
-    * pruning works on the compacted base exactly as on the epochs it
-    * replaced.
-    *
-    * Crash safety (the serving sink's original protocol, now shared):
-    * the fold is parked under `parkDir/upto=<maxCov>` BEFORE any covered
-    * dir is deleted, and every entry first calls
-    * [[recoverCrashedCompaction]]. A crash anywhere in the
-    * delete-then-rename window leaves either (a) an incomplete fold (no
-    * _SUCCESS) with all covered dirs intact — discarded and redone — or
-    * (b) a complete fold whose coverage is recorded in its dir name —
-    * finished by deleting the remaining `epoch<=maxCov` remnants and
-    * renaming the fold into place. Nothing committed is ever lost. */
-  def compactEpochStore(spark: SparkSession, storeDir: String, parkDir: String,
-                        uptoEpoch: Long = Long.MaxValue,
-                        writePartitionBy: Seq[String] = Nil)
-                       (fold: DataFrame => DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(storeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    recoverCrashedCompaction(spark, storeDir, parkDir)
-    val covered = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("epoch="))
-      .map(s => (s.getPath, s.getPath.getName.stripPrefix("epoch=").toLong))
-      .filter(_._2 < uptoEpoch)
-    if (covered.size <= 1) return // already compact — makes re-runs no-ops
-    val maxCov = covered.map(_._2).max
-    // read the covered dirs ONE BY ONE and union — the epoch ids are
-    // consumed above, not needed in the fold, and a multi-root read over
-    // dirs with sub-partitions (e.g. list_id) trips Spark's global
-    // partition inference (CONFLICTING_DIRECTORY_STRUCTURES); per-dir
-    // reads discover each dir's own partition columns cleanly
-    val folded = fold(covered.map(p => spark.read.parquet(p._1.toString))
-      .reduce(_ unionByName _))
-    val tmp = new Path(s"$parkDir/upto=$maxCov")
-    val w0 = folded.write.mode("overwrite")
-    val w = if (writePartitionBy.isEmpty) w0 else w0.partitionBy(writePartitionBy: _*)
-    w.parquet(tmp.toString)
-    covered.foreach { case (p, _) => fs.delete(p, true) }
-    // Hadoop rename signals failure by RETURNING false (quota, permission,
-    // cross-FS, missing dst parent) — not by throwing. At this point the
-    // covered dirs are gone and the parked fold is the ONLY copy of the
-    // committed rows, so a silent false here followed by the park-dir
-    // delete below would destroy committed data. Fail loudly instead: a
-    // leftover parked fold is recoverable on the next entry; a deleted
-    // one is not.
-    val dst = new Path(s"$storeDir/epoch=$maxCov")
-    require(fs.rename(tmp, dst), s"compaction rename $tmp -> $dst failed; parked fold kept for recovery")
-    fs.delete(new Path(parkDir), true) // now-empty park dir
-  }
-
-  /** Finish or discard a compaction interrupted by a crash. A COMPLETE
-    * parked fold (has _SUCCESS) covers exactly the epoch dirs ≤ the
-    * `upto` in its name as of when it was written, so the swap can be
-    * replayed: delete the remnants it covers, rename it into place. An
-    * INCOMPLETE fold is deleted — its covered dirs were never touched.
-    * At most one complete fold can exist (every compaction recovers
-    * before parking a new one). */
-  private[streaming] def recoverCrashedCompaction(spark: SparkSession,
-      storeDir: String, parkDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val troot = new Path(parkDir)
-    val fs = troot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(troot)) return
-    fs.listStatus(troot).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("upto="))
-      .foreach { st =>
-        val upto = st.getPath.getName.stripPrefix("upto=").toLong
-        if (fs.exists(new Path(st.getPath, "_SUCCESS"))) {
-          val root = new Path(storeDir)
-          if (fs.exists(root)) fs.listStatus(root).toSeq
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("epoch="))
-            .filter(_.getPath.getName.stripPrefix("epoch=").toLong <= upto)
-            .foreach(s => fs.delete(s.getPath, true))
-          // rename needs an existing dst parent, and reports failure by
-          // returning false — this fold is the only copy of the covered
-          // rows, so a false here must abort (keeping the park dir)
-          // rather than fall through to the troot delete below.
-          fs.mkdirs(root)
-          val dst = new Path(s"$storeDir/epoch=$upto")
-          require(fs.rename(st.getPath, dst), s"compaction recovery rename ${st.getPath} -> $dst failed; parked fold kept")
-        } else fs.delete(st.getPath, true)
-      }
-    fs.delete(troot, true)
-  }
+    EpochManifest.compact(spark, partialsRoot(servingDir), servingPartialSchema,
+      uptoEpoch, coalesceTo = 1, fold = foldPartials)
 
   /** Bound the dir count of the persisted text band index on a long
     * stream: fold the committed band and shingle epochs (< `uptoEpoch`)
@@ -833,7 +730,6 @@ object Jobs {
     * verify (shingles) side. */
   def compactBandIndex(spark: SparkSession, indexDir: String,
                        uptoEpoch: Long = Long.MaxValue): Unit = {
-    import graft.core.EpochManifest
     import graft.queries.TextCatalog
     val par = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     EpochManifest.compact(spark, TextCatalog.shinglesRoot(indexDir),
@@ -854,19 +750,10 @@ object Jobs {
   /** Bound the epoch count of the PQ-coded IVF index's code store
     * ([[graft.queries.VectorCatalog.buildIvfPqIndex]] layout): the fold
     * keeps `list_id` as a partition column, so the compacted base prunes
-    * at directory level exactly like the epochs it replaced.
-    *
-    * Unlike the other epoch stores (which use [[compactEpochStore]]'s
-    * delete-then-rename swap under a no-concurrent-readers contract),
-    * the codes store serves SEARCHES while it ingests, so its compaction
-    * goes through the [[graft.core.EpochManifest]] snapshot protocol:
-    * the fold lands as a new immutable dir, ONE manifest commit swaps
-    * the covered entries for it, and gc() deletes only dirs invisible
-    * to both of the two newest manifests — a searcher holding the
-    * pre-compaction snapshot keeps every file it resolved. Crash safety
-    * falls out: a crash before the commit leaves an orphan fold dir
-    * (gc'd later) and the old manifest fully live — there is no
-    * park/recover dance because no committed dir is ever mutated. */
+    * at directory level exactly like the epochs it replaced. The store
+    * serves searches while it ingests; a searcher holding the
+    * pre-compaction snapshot keeps every file it resolved
+    * ([[graft.core.EpochManifest.gc]] lags the two newest manifests). */
   def compactIvfPqIndex(spark: SparkSession, indexDir: String,
                         uptoEpoch: Long = Long.MaxValue): Unit =
     graft.core.EpochManifest.compact(spark,
@@ -1050,73 +937,38 @@ object Jobs {
   /** Streaming IVF index maintenance — the ST twin of
     * [[graft.queries.VectorCatalog.buildIvfIndex]]: arriving vectors are
     * tagged with their cell by the broadcast coarse-quantizer model (a
-    * stateless narrow map — no watermark, no state store) and landed as
-    * epoch dir `epoch=<id+1>` (the batch build owns `epoch=0`), each
-    * epoch `list_id`-partitioned — so the index stays partition-prunable
-    * for [[graft.queries.VectorCatalog.searchIvfIndex]] while it
-    * ingests, and each micro-batch writes only the cells its rows land
-    * in.
-    *
-    * foreachBatch + epoch-keyed OVERWRITE, NOT a parquet file sink: a
-    * file sink's `_spark_metadata` log takes over every later
-    * `spark.read.parquet(indexDir)` and silently EXCLUDES the
-    * batch-built base files — searches would return streamed rows only.
-    * The epoch-keyed overwrite keeps retries exactly-once (a replayed
-    * epoch replaces its own dir) with plain batch-composable writes —
-    * the same discipline as [[ivfPqIngest]]. The model is fixed for the
-    * stream's lifetime (the standard IVF contract — re-training means
-    * re-building); at 100 TB the same broadcast bounds apply as in the
-    * batch path. */
+    * stateless narrow map — no watermark, no state store) and appended
+    * as manifest epoch `epochId + 1` (the batch build owns epoch 0),
+    * `list_id`-partitioned, so the index stays partition-prunable for
+    * [[graft.queries.VectorCatalog.searchIvfIndex]] while it ingests. A
+    * retried epoch commits a replacement entry (exactly-once), and a
+    * concurrent search keeps the snapshot it opened — the same
+    * discipline as [[ivfPqIngest]]. The model is fixed for the stream's
+    * lifetime (the standard IVF contract — re-training means
+    * re-building). */
   def ivfIndexAppend(vectors: DataFrame,
                      assigner: graft.functions.VectorOps.IvfAssigner,
-                     indexDir: String, checkpointDir: String): StreamingQuery = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(assigner)
+                     indexDir: String, checkpointDir: String): StreamingQuery =
     vectors.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        import batch.sparkSession.implicits._
-        val sp = batch.sparkSession
-        // land the epoch via write-tmp-then-rename so a concurrent
-        // searchIvfIndex never observes a half-written epoch dir: the
-        // rename publishes the dir atomically. (A RETRIED epoch first
-        // drops its failed attempt's dir — that delete+rename window is
-        // the one residual nonatomicity, entered only after a crash;
-        // the snapshot-isolated manifest protocol the PQ codes store
-        // uses is the full answer where search-during-ingest is the
-        // steady state.)
-        import org.apache.hadoop.fs.Path
-        val root = new Path(indexDir)
-        val fs = root.getFileSystem(sp.sparkContext.hadoopConfiguration)
-        val tmp = new Path(s"$indexDir/.tmp-epoch-${epochId + 1}")
-        batch
-          .select(col("vec_id").cast("long"), col("embedding"))
-          .as[(Long, Array[Float])]
-          .map { case (id, emb) => (id, emb, bc.value.assign(emb)) }
-          .toDF("vec_id", "embedding", "list_id")
-          .write.mode("overwrite").partitionBy("list_id")
-          .parquet(tmp.toString)
-        val dst = new Path(s"$indexDir/epoch=${epochId + 1}")
-        if (fs.exists(dst)) fs.delete(dst, true)
-        require(fs.rename(tmp, dst), s"epoch publish rename $tmp -> $dst failed")
+        graft.queries.VectorCatalog.appendIvfIndex(
+          batch, assigner, indexDir, epoch = epochId + 1)
         ()
       }
       .start()
-  }
 
   /** Streaming maintenance of the PQ-CODED IVF index
     * ([[graft.queries.VectorCatalog.buildIvfPqIndex]] layout — the 100 TB
     * deployment's 8-bytes-per-vector read path): each micro-batch is
     * assigned + PQ-encoded in one narrow map against the broadcast fixed
     * model and landed as code epoch `epochId + 1` (epoch 0 is the base
-    * build) under an epoch-keyed OVERWRITE — a retried epoch replaces its
-    * own output, so the index is exactly-once without a file-sink
-    * metadata log, which is precisely what lets [[compactIvfPqIndex]]
-    * fold committed epochs (a metadata-logged sink pins its file set
-    * forever; this one's epochs are plain dirs under the rename
-    * protocol). Compaction runs every `compactEvery` epochs covering only
+    * build) as a manifest append — a retried epoch commits a replacement
+    * entry, so the index is exactly-once without a file-sink metadata
+    * log, which is precisely what lets [[compactIvfPqIndex]] fold
+    * committed epochs (a metadata-logged sink pins its file set
+    * forever). Compaction runs every `compactEvery` epochs covering only
     * committed epochs, so the store's dir count stays bounded for the
     * stream's lifetime while every epoch dir keeps the `list_id`
     * partition layout that search pruning needs. */

@@ -419,34 +419,127 @@ class StreamingSpec extends SparkSpec {
       Seq(("click", 2L, 4.5), ("view", 1L, 2.5)))
   }
 
-  test("compaction recovery: a crash between deletes and rename loses nothing") {
+  test("serving partials under the bench committer: a crash before any " +
+       "manifest commit loses and double-counts nothing") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_recover").toString
-    val serving = s"$dir/serving"
-    def writePartial(epoch: Int, typ: String, n: Long, total: Double): Unit =
-      Seq((typ, n, total)).toDF("event_type", "n", "total_dec")
-        .withColumn("total_dec", col("total_dec").cast(graft.queries.Parity.Dec))
-        .write.mode("overwrite").parquet(s"$serving.partials/epoch=$epoch")
-    writePartial(0, "click", 1L, 10.0)
-    writePartial(1, "click", 1L, 20.0)
-    writePartial(2, "view", 1L, 5.0)
-    // simulate a compaction of epochs {0,1} that crashed mid-swap: the
-    // complete fold is parked (with _SUCCESS), epoch=0 was deleted, but
-    // epoch=1 and the final rename never happened
-    spark.read.parquet(s"$serving.partials/epoch=0", s"$serving.partials/epoch=1")
-      .groupBy("event_type").agg(sum("n").as("n"), sum("total_dec").as("total_dec"))
-      .write.parquet(s"$serving.compact_tmp/upto=1")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$serving.partials/epoch=0"), true))
-    // the next compaction entry must recover (finish the swap) BEFORE
-    // folding — refolding the epoch=1 remnant would double-count it, and
-    // the old code deleted the parked fold, losing epoch=0 entirely
-    Jobs.compactServingPartials(spark, serving, uptoEpoch = 3)
-    val out = Jobs.servingFromPartials(spark, serving).orderBy("event_type")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(out == Seq(("click", 2L, 30.0), ("view", 1L, 5.0)), s"got $out")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$serving.compact_tmp")))
+    import graft.core.EpochManifest
+    import org.apache.hadoop.fs.Path
+    // Bench.sessionBuilder's committer settings: no success marker,
+    // algorithm v2 (task output lands in place at task commit)
+    val hc = spark.sparkContext.hadoopConfiguration
+    val committer = Seq(
+      "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false",
+      "mapreduce.fileoutputcommitter.algorithm.version" -> "2")
+    val saved = committer.map { case (k, _) => k -> Option(hc.get(k)) }
+    committer.foreach { case (k, v) => hc.set(k, v) }
+    CrashFs.install(spark)
+    try {
+      val local = Files.createTempDirectory("graft_serving_crash").toString
+      val src = s"$local/src"
+      val serving = s"crashfs://$local/serving"
+      val root = s"$serving.partials"
+      val fs = new Path(root).getFileSystem(hc)
+      val rnd = new scala.util.Random(20261018L)
+      // truth: every event the stream has committed
+      val landed = scala.collection.mutable.ArrayBuffer[Event]()
+      var nextId = 0L
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+      def check(tag: String): Unit = {
+        val want = rows(spark.createDataset(landed.toSeq).toDF()
+          .groupBy("event_type")
+          .agg(count(lit(1)).as("n"),
+            sum(col("value").cast(graft.queries.Parity.Dec)).cast("double").as("total")))
+        assert(rows(Jobs.servingFromPartials(spark, serving)) == want, s"$tag: partials")
+        assert(rows(spark.read.parquet(serving)) == want, s"$tag: served view")
+      }
+      def nextFile(): Seq[Event] = {
+        val evs = (0 until rnd.between(1, 5)).map { _ =>
+          nextId += 1
+          Event(nextId, ts(f"2024-01-01 00:${nextId % 60}%02d:00"), rnd.nextLong(5L),
+            Seq("click", "view", "purchase")(rnd.nextInt(3)),
+            rnd.nextInt(10000) / 100.0, "{}")
+        }
+        spark.createDataset(evs).toDF().coalesce(1).write.mode("append").json(src)
+        evs
+      }
+      def run(): Unit =
+        Jobs.dualSinkQuery(Jobs.clean(Jobs.readEventStream(spark, src, 1)),
+          s"$local/raw", serving, s"$local/cp", compactEvery = 0)
+          .awaitTermination(60000)
+      // data dirs no retained manifest names: crash leavings
+      def uncommitted(): Seq[Path] = {
+        val named = EpochManifest.generations(spark, root)
+          .flatMap(g => EpochManifest.entriesAt(spark, root, g)).map(_.dir).toSet
+        fs.listStatus(new Path(root)).toSeq.map(_.getPath)
+          .filter(p => p.getName.matches("[df]\\d+-\\d+") && !named(p.getName))
+      }
+      val crashed = scala.collection.mutable.ArrayBuffer[Path]()
+
+      def land(): Unit = { landed ++= nextFile(); run() }
+      def crashLand(): Unit = {
+        // the epoch's partial is written, its commit dies: the committed
+        // answer is unchanged, and the restarted stream retries the epoch
+        val evs = nextFile()
+        CrashFs.armed.set(true)
+        val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
+        assert(e.getMessage.contains("injected crash"), e.getMessage)
+        val orphans = uncommitted().filterNot(crashed.contains)
+        assert(orphans.size == 1 && orphans.head.getName.startsWith("d"),
+          s"expected the crashed epoch's data dir, got $orphans")
+        crashed ++= orphans
+        check("after the crashed epoch")
+        landed ++= evs
+        run()
+        val epochs = EpochManifest.entries(spark, root).map(_.epoch)
+        assert(epochs.distinct.size == epochs.size, s"an epoch landed twice: $epochs")
+      }
+      def compact(): Unit = {
+        Jobs.compactServingPartials(spark, serving)
+        val es = EpochManifest.entries(spark, root)
+        assert(es.size == 1, s"compaction left ${es.size} entries")
+        // the fold is re-aggregated: one row per event_type, not per epoch
+        val fold = spark.read.schema(Jobs.servingPartialSchema)
+          .parquet(s"$root/${es.head.dir}").select("event_type").collect()
+        assert(fold.length == fold.distinct.length &&
+          fold.length == landed.map(_.event_type).distinct.size)
+      }
+      def crashCompact(): Unit = {
+        // the fold is written, the manifest swap dies: readers keep the old
+        // snapshot, and the next compaction folds only committed entries
+        CrashFs.armed.set(true)
+        val e = intercept[java.io.IOException](Jobs.compactServingPartials(spark, serving))
+        assert(e.getMessage.contains("injected crash"), e.getMessage)
+        val orphans = uncommitted().filterNot(crashed.contains)
+        assert(orphans.size == 1 && orphans.head.getName.startsWith("f"),
+          s"expected the crashed fold dir, got $orphans")
+        assert(fs.listStatus(orphans.head).exists(_.getPath.getName.endsWith(".parquet")),
+          "the fold was not written before the crash")
+        assert(!fs.exists(new Path(orphans.head, "_SUCCESS")),
+          "the committer wrote a success marker — the bench settings did not apply")
+        crashed ++= orphans
+        check("after the crashed fold")
+        compact()
+      }
+
+      Seq[(String, () => Unit)](
+        "land" -> land, "land" -> land, "crash-land" -> crashLand,
+        "crash-compact" -> crashCompact, "land" -> land, "crash-land" -> crashLand,
+        "land" -> land, "compact" -> compact, "land" -> land,
+        "crash-land" -> crashLand, "crash-compact" -> crashCompact
+      ).zipWithIndex.foreach { case ((tag, op), i) => op(); check(s"op $i ($tag)") }
+      assert(crashed.size == 5)
+      // gc reclaims every never-committed dir the crashes left behind
+      EpochManifest.gc(spark, root, orphanAgeMs = 0L)
+      crashed.foreach(p => assert(!fs.exists(p), s"orphan $p survived gc"))
+      check("after gc")
+    } finally {
+      CrashFs.armed.set(false)
+      saved.foreach {
+        case (k, Some(v)) => hc.set(k, v)
+        case (k, None) => hc.unset(k)
+      }
+    }
   }
 
   test("in-line compaction bounds the partial store over many epochs") {
@@ -461,13 +554,10 @@ class StreamingSpec extends SparkSpec {
       Jobs.clean(Jobs.readEventStream(spark, src, maxFilesPerTrigger = 1)),
       s"$dir/raw", s"$dir/serving", s"$dir/cp", compactEvery = 2)
     q.awaitTermination(120000)
-    // without in-line compaction this would be 9 dirs — one per epoch
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val partialDirs = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/serving.partials"))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("epoch="))
-    assert(partialDirs.length <= 3,
-      s"partial store not bounded: ${partialDirs.length} epoch dirs")
+    // without in-line compaction this would be 9 entries — one per epoch
+    val partials = graft.core.EpochManifest.entries(spark, s"$dir/serving.partials")
+    assert(partials.length <= 3,
+      s"partial store not bounded: ${partials.length} committed entries")
     // and the compacted serving aggregate is identical to the all-at-once
     // batch aggregate over the same events (decimal fold = exact)
     val serving = spark.read.parquet(s"$dir/serving").orderBy("event_type")
@@ -1181,7 +1271,8 @@ class StreamingSpec extends SparkSpec {
     // one read of the root sees base AND streamed epochs — the regression
     // this guards: the old parquet file SINK left a _spark_metadata log
     // that silently excluded every batch-built base file from reads
-    val idx = spark.read.parquet(s"$dir/idx")
+    val idx = graft.core.EpochManifest.read(spark, s"$dir/idx",
+      graft.queries.VectorCatalog.ivfIndexSchema)
     assert(idx.count() == corpus.count(), "base + streamed rows lost or duplicated")
     val got = idx.filter(col("vec_id") < 50)
       .select(col("vec_id"), col("list_id").cast("long"))

@@ -196,7 +196,8 @@ class VectorSpec extends SparkSpec {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }.getOrElse(fail("no parquet scan in the search plan"))
     assert(scan.partitionFilters.nonEmpty, "scan has no partition filters")
-    val allCells = spark.read.parquet(s"$dir/index")
+    val allCells = graft.core.EpochManifest.read(spark, s"$dir/index",
+        VectorCatalog.ivfIndexSchema)
       .select("list_id").distinct().count()
     assert(scan.selectedPartitions.partitionCount == touched.size,
       s"scan reads ${scan.selectedPartitions.partitionCount} cells, probed ${touched.size}")
